@@ -5,7 +5,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** The engine's shared materialization / lineage-cut primitive.
   *
-  * Several pipelines derive one frame that multiple consumers read
+  * Several query families derive one frame that multiple consumers read
   * (the near-dup pair graph, the LM model frames, iterative component
   * /rank state). Deriving it once and materializing is the right
   * design at any scale; HOW it is materialized is a durability /

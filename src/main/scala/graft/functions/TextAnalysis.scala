@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Reuse.ReuseOps
 
-/** Text-analysis primitives for large-scale training-data pipelines:
+/** Text-analysis primitives for large-scale training-data preparation:
   * tokenization, quality scoring, language ID, fingerprinting.
   *
   * Everything here is a pure `Column` expression built from
@@ -757,7 +757,7 @@ object TextAnalysis {
   }
 
   /** Per-document DEFLATE compression ratio — the cheap "does this
-    * text look like natural language" signal curation pipelines run
+    * text look like natural language" signal curation jobs run
     * alongside the token-repetition rules: boilerplate, template spam,
     * and generated filler compress far below natural prose
     * (`compressed/raw` ≪ natural-language ~0.3–0.6), while random or
@@ -1819,7 +1819,7 @@ object TextAnalysis {
 
   /** Sentence segmentation: split on terminal-punctuation runs followed
     * by whitespace — the preprocessing step sentence-level dedup,
-    * sentence-piece training, and alignment pipelines start from. The
+    * sentence-piece training, and alignment jobs start from. The
     * regex is restricted to constructs java.util.regex and RE2 treat
     * identically (like [[BpeishPattern]]). A final sentence with no
     * trailing whitespace keeps its punctuation (the delimiter never

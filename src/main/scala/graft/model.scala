@@ -35,7 +35,7 @@ final case class Transaction(
   * (`DataStreamJob.java:133`) even though the target PK is (date, category).
   *
   * The three aggregate case classes are the documented typed contract of
-  * the reference's output DTOs; the pipelines themselves are DataFrame
+  * the reference's output DTOs; the aggregations themselves are DataFrame
   * transforms (`operators/Ecommerce`) whose snake_case column schemas the
   * JdbcUpsert DDL pins — these classes exist for callers wanting typed
   * `Dataset` views, not as internal plumbing.

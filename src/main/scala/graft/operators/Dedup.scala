@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
 import graft.Reuse.ReuseOps
 import graft.functions.TextAnalysis
 
-/** Deduplication family for training-data pipelines: exact, n-gram
+/** Deduplication family for training-data preparation: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash. All operators are declarative
   * DataFrame transforms — Catalyst keeps pushdown/pruning, and every
   * pairwise step is an inverted-index or bucket JOIN, never an O(n²)
@@ -377,7 +377,7 @@ object Dedup {
     // typed subtree (verified in the executed plan), so without the
     // eager localCheckpoint the corpus would be tokenized and chunked
     // once per consumer. The checkpoint materializes the keyed span
-    // rows exactly once — the same move CCNet-style pipelines make when
+    // rows exactly once — the same move CCNet-style systems make when
     // they write the paragraph-hash table before joining against it; at
     // cluster scale this is a corpus-sized persist(DISK_ONLY)-class
     // materialization, priced once. (No repartition: checkpointed
@@ -1295,7 +1295,7 @@ object Dedup {
     * TEST-ONLY, SINGLE-THREADED instrumentation by contract: it is a
     * process-global slot, so concurrent `nearDupComponents` calls in one
     * JVM race on it and a reader observes whichever call finished last.
-    * Production pipelines must not branch on it; the operator's result
+    * Production code must not branch on it; the operator's result
     * is unaffected. (Kept global deliberately: threading a counter
     * through the return type would complicate every call site for a
     * value only DedupSpec reads.) */
@@ -1568,7 +1568,7 @@ object Dedup {
     * expression — the production signature path: no token explode, no
     * 64-aggregate shuffle; one projected long per document. The
     * `repartition(id)` is the same materialization-barrier idiom as in
-    * the Jaccard/MinHash pipelines: the signature feeds the band
+    * the Jaccard/MinHash paths: the signature feeds the band
     * posexplode AND both verification join sides, whose differing
     * output partitionings would otherwise each recompute it (~3× at the
     * profiled query shape). Docs with null/empty token arrays carry a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The reference's three analytical pipelines, re-expressed as pure
+/** The reference's three analytical dataflows, re-expressed as pure
   * `DataFrame => DataFrame` transforms (SURVEY.md §2 M1–M3/K1–K3/R1–R3).
   *
   * Each is a declarative `groupBy().agg()` — Catalyst plans a partial

@@ -595,7 +595,7 @@ object Multimodal {
     * in production also native decoder handles) initializes once per
     * partition, and the iterator streams — constant memory regardless of
     * partition size. Input partitioning is preserved: no shuffle is
-    * introduced, so this pipelines directly after the parquet scan.
+    * introduced, so this chains directly after the parquet scan.
     *
     * Image payloads go through the REAL `ImageCodec` (javax.imageio):
     * true pixel dims, mean luminance, luminance histogram. Non-image

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Distributed PCA for embedding columns — the preprocessing step the
   * semantic-dedup / clustering literature applies before SemDeDup-style
-  * pipelines (reduce d, whiten, THEN cluster).
+  * dedup (reduce d, whiten, THEN cluster).
   *
   * Architecture is the mini-batch-k-means split
   * (`Similarity.trainCentroidsMiniBatch`): the corpus-sized work is ONE

@@ -866,7 +866,7 @@ object Similarity {
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val allPlanes = hyperplanes(bitsPerTable * numTables, d, seed)
     // NO materialization barrier here, unlike the Jaccard/SimHash
-    // pipelines — measured (3-pass minima, sf0.1): an explicit
+    // paths — measured (3-pass minima, sf0.1): an explicit
     // (tbl, bkt) repartition of `banded` costs MORE than recomputing
     // the codegen hyperplane pass per join side (+1.1 s), because the
     // multi-probe side explodes its flips AFTER any shared exchange and

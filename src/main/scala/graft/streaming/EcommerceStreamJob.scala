@@ -1,64 +1,66 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.Transaction
 import graft.ingest.Json
-import graft.operators.Ecommerce
 import graft.sinks.JdbcUpsert
 import graft.sinks.JdbcUpsert.ConnConfig
 
 /** The end-to-end streaming job: the Spark-native counterpart of the
   * reference's single Flink dataflow (`DataStreamJob.java:84-170`).
   *
-  * Topology decision (vs SURVEY.md §3's "single read + foreachBatch
-  * fan-out" sketch): the three aggregations are RUNNING totals — state
-  * since job start — so they must live in Structured Streaming state
-  * stores (`groupBy().agg()` + `outputMode("update")`), and Spark allows
-  * one streaming aggregation per query. We therefore run FOUR queries
-  * over the same topic (raw copy + three aggs), each with its own
-  * checkpoint. This preserves the two properties the reference relies on:
-  *   - convergence: update-mode emits the full running total for every
-  *     changed key each micro-batch, so the `ON CONFLICT … SET total_sales
-  *     = EXCLUDED.total_sales` replace-upsert converges to the same DB
-  *     end-state as Flink's per-record emission;
-  *   - idempotency: replays re-write the same totals (at-least-once safe),
-  *     unlike a per-batch delta + additive upsert, which double-counts.
-  * Kafka serves multiple consumers from the page cache; the extra reads
-  * are projection-pruned to the few columns each pipeline needs. State is
-  * unwindowed and grows with key cardinality — exactly like the reference
-  * (no watermark, `DataStreamJob.java:98`); cardinality here is
-  * categories/days/months, i.e. tiny. For unbounded keys use the
-  * watermarked variants in `Windows` instead.
+  * Topology: ONE streaming query. Each micro-batch reads the source once
+  * and fans out to the raw copy and the three running totals, as the
+  * reference does (`DataStreamJob.java:113-163`). The totals are state
+  * since job start, so they live in the checkpointed state store — but
+  * Spark allows one streaming aggregation per query, so three
+  * `groupBy().agg()` cannot share one. They do not need to: the three
+  * totals are one keyed-state computation over a composite
+  * `(kind, key)` space, so a single `flatMapGroupsWithState` keeps all
+  * three families, and the raw rows ride the same shuffle as stateless
+  * passthrough. Per batch the touched rows are persisted once and all
+  * four tables are written from them. That is one source read, one
+  * shuffle, one state commit and one checkpoint per trigger; the
+  * alternative of one query per table paid a read and a checkpoint per
+  * table and a shuffle and a state commit per total, and measured
+  * slower on both the live and the backfill workload of `perfbench`.
   *
-  * [[startAllSharedSource]] is the SINGLE-READ form of the same job
-  * (SURVEY §3 option (a), reference parity `DataStreamJob.java:113-163`):
-  * one query, one source read per micro-batch, all three running-total
-  * families in one composite-key `flatMapGroupsWithState`, all four
-  * tables written per batch from one persisted frame. Same DB end-state
-  * (SharedSourceStreamSpec proves it batch-for-batch); pick by trade —
-  * read amplification (shared) vs per-pipeline isolation (four-query).
+  * Two properties carry the reference's sink semantics over:
+  *   - convergence: update mode emits the full running total of every
+  *     touched key each micro-batch, so the `ON CONFLICT … SET
+  *     total_sales = EXCLUDED.total_sales` replace-upsert converges to
+  *     the same DB end-state as Flink's per-record emission;
+  *   - idempotence under replay: a micro-batch that fails part-way —
+  *     some of its four tables committed, others not — is replayed from
+  *     the offset log against the state of the previous batch, so it
+  *     re-emits the same totals and raw rows, and the keyed replace
+  *     rewrites what already landed without double counting (a per-batch
+  *     delta with an additive upsert would double count).
+  *
+  * State is unwindowed and grows with key cardinality — exactly like
+  * the reference (no watermark, `DataStreamJob.java:98`); cardinality
+  * here is categories/days/months, i.e. tiny, and raw rows write no
+  * state. For unbounded keys use the watermarked variants in `Windows`.
   */
 object EcommerceStreamJob {
 
   /** Config surface mirroring the reference's parameters
     * (`DataStreamJob.java:71-78`: kafka servers, topic, group, db url/user/
     * password — note the reference swaps user/password keys at `:108-109`;
-    * we do not reproduce that bug). */
-  /** `checkpointRoot` is deliberately required (no default): the
+    * we do not reproduce that bug).
+    *
+    * `checkpointRoot` is deliberately required (no default): the
     * running totals live in the checkpointed state store, and a
     * non-durable location (e.g. /tmp) means a host restart resets the
     * totals and the replace-upserts then overwrite the accumulated DB
     * values with small restarted ones.
     *
-    * `groupId` empty ⇒ let Spark generate a UNIQUE consumer group per
-    * query. The four concurrent queries of this job must NOT share one
-    * group id — the Spark Kafka integration warns that concurrent
-    * queries in the same group interfere and each read only part of the
-    * topic. Set it only for broker-side ACL requirements, and then run
-    * a single query per job instance. */
+    * `groupId` empty ⇒ Spark generates the query's consumer group; set
+    * it when broker ACLs require a known one. */
   final case class JobConfig(
       checkpointRoot: String,
       kafkaServers: String = "broker:29092",
@@ -75,7 +77,7 @@ object EcommerceStreamJob {
     * NOTE: requires the `spark-sql-kafka-0-10` connector on the runtime
     * classpath (standard on any Spark distribution with Kafka support;
     * NOT present in this offline build environment, where tests drive
-    * the same pipelines through MemoryStream / `fileSource`). */
+    * the same query through MemoryStream / `fileSource`). */
   /** The exact reader options `kafkaSource` passes to the connector —
     * split out as a pure function so the wiring contract is testable
     * without a broker or the connector jar (KafkaContractSpec). What
@@ -112,20 +114,6 @@ object EcommerceStreamJob {
   def parse(raw: DataFrame): DataFrame =
     Json.validTransactions(Json.parseTransactions(raw))
 
-  /** Pipeline B: running sales per category (M1/K1/R1 semantics incl. the
-    * first-seen-date quirk). */
-  def categoryAgg(tx: DataFrame): DataFrame =
-    Ecommerce.salesPerCategoryFaithful(tx, "transactionDate",
-      "productCategory", "totalAmount")
-
-  /** Pipeline C/day. */
-  def dayAgg(tx: DataFrame): DataFrame =
-    Ecommerce.salesPerDay(tx, "transactionDate", "totalAmount")
-
-  /** Pipeline C/month (faithful month-only key, first-seen year). */
-  def monthAgg(tx: DataFrame): DataFrame =
-    Ecommerce.salesPerMonthFaithful(tx, "transactionDate", "totalAmount")
-
   /** Raw transactions projected to the DB column names
     * (`DataStreamJob.java:318-331`). */
   def rawForDb(tx: DataFrame): DataFrame =
@@ -143,81 +131,12 @@ object EcommerceStreamJob {
       col("transactionDate").as("transaction_date"),
       col("paymentMethod").as("payment_method"))
 
-  // ---- wiring ----
-
-  private def upsertEachBatch(table: String, keys: Seq[String], cfg: JobConfig)(
-      batch: DataFrame, batchId: Long): Unit =
-    JdbcUpsert.upsert(batch, table, keys, cfg.db)
-
-  /** The four pipelines of the job as (queryName, transform, outputMode,
-    * targetTable, upsertKeys) — the single topology description both
-    * `startAll` (JDBC) and tests (captured sinks) wire up.
-    * Conflict targets = the table PKs (`DataStreamJob.java:280,293,307`);
-    * the faithful aggs pin date/year per key, so the full-PK conflict
-    * target hits the same row every update. */
-  val pipelines: Seq[(String, DataFrame => DataFrame, String, String, Seq[String])] = Seq(
-    ("raw_transactions", rawForDb _, "append", "transactions", Seq("transaction_id")),
-    ("sales_per_category", categoryAgg _, "update", "sales_per_category",
-      Seq("transaction_date", "category")),
-    ("sales_per_day", dayAgg _, "update", "sales_per_day", Seq("transaction_date")),
-    ("sales_per_month", monthAgg _, "update", "sales_per_month", Seq("year", "month"))
-  )
-
-  /** Start the full topology with a custom per-batch sink — the test
-    * seam. `sink(table, keys)(batchDf, batchId)` is invoked per
-    * micro-batch of each pipeline. */
-  def startAllWithSink(spark: SparkSession, cfg: JobConfig, source: DataFrame)(
-      sink: (String, Seq[String]) => (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
-    val tx = parse(source)
-    pipelines.map { case (name, transform, mode, table, keys) =>
-      transform(tx).writeStream
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", s"${cfg.checkpointRoot}/$name")
-        .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-        .foreachBatch(sink(table, keys))
-        .start()
-    }
-  }
-
-  /** Start the full job: DDL once at startup (replacing the reference's
-    * no-op DDL "sinks" W1–W4), then four streaming queries upserting
-    * into Postgres. */
-  def startAll(spark: SparkSession, cfg: JobConfig,
-      source: Option[DataFrame] = None): Seq[StreamingQuery] = {
-    JdbcUpsert.runDdl(cfg.db)
-    startAllWithSink(spark, cfg, source.getOrElse(kafkaSource(spark, cfg))) {
-      (table, keys) => upsertEachBatch(table, keys, cfg) _
-    }
-  }
-
-  // ---- single-read fan-out topology (SURVEY §3 option (a)) ----
-  //
-  // [[startAll]] runs FOUR independent queries over the topic — simple,
-  // isolated, but 4× source read amplification and 4 consumer groups
-  // where the reference reads once and fans out inside one dataflow
-  // (DataStreamJob.java:113-163). The shared-source topology below is
-  // that reference shape: ONE query, ONE source read per micro-batch.
-  // Spark's one-streaming-aggregation-per-query limit is sidestepped by
-  // observing that the three running totals are ONE keyed-state
-  // computation over a composite (kind, key) space — a single
-  // `flatMapGroupsWithState` maintains all three total families, and
-  // the raw copy rides the same stream as stateless passthrough rows.
-  // Per batch the sink receives the union of touched rows and writes
-  // all four tables from one persisted frame.
-  //
-  // The trade: the fan-out costs one keyed shuffle of the batch
-  // (4 rows per transaction — three skinny agg contributions plus the
-  // raw struct), where the four-query form costs three extra source
-  // reads + three shuffles of the skinny contributions. Against a real
-  // broker the single read wins (network + page-cache pressure, one
-  // consumer group); the four-query form remains the isolation variant
-  // (one pipeline's failure/checkpoint never stalls another).
+  // ---- the fan-out query ----
 
   /** One row of the composite-key fan-in stream: each parsed
     * transaction contributes one `raw` passthrough row plus three agg
     * contributions (`cat` / `day` / `mon`). Calendar fields are
-    * computed with the SAME Spark SQL expressions the batch pipelines
+    * computed with the SAME Spark SQL expressions the batch aggregates
     * use (`to_date` / `month` / `year`), so values match bit-for-bit. */
   final case class FanRow(kind: String, key: String, date: java.sql.Date,
       year: Int, amount: Double, tx: Option[Transaction])
@@ -255,8 +174,8 @@ object EcommerceStreamJob {
   /** The single state operator: running totals for all three agg
     * families plus stateless raw passthrough, in one keyed shuffle.
     * Update-mode emission — only (kind, key) groups touched by the
-    * batch emit, carrying the full running total (the same convergence
-    * contract as the four-query topology's update-mode aggs). */
+    * batch emit, carrying the full running total — what the
+    * replace-upsert needs to converge. */
   def fanState(rows: Dataset[FanRow]): Dataset[FanOut] = {
     val spark = rows.sparkSession
     import spark.implicits._
@@ -281,19 +200,43 @@ object EcommerceStreamJob {
       }
   }
 
-  /** Start the single-read topology with a custom per-batch sink (the
-    * same sink seam as [[startAllWithSink]], so specs drive both
-    * topologies identically). One streaming query; per micro-batch the
+  /** Query name, and the checkpoint subdirectory under `checkpointRoot`. */
+  private val queryName = "shared_source"
+
+  /** Subdirectories an earlier version of this job wrote under
+    * `checkpointRoot`, one per query when it ran one query per table. */
+  private val perTableCheckpoints =
+    Seq("raw_transactions", "sales_per_category", "sales_per_day", "sales_per_month")
+
+  /** Refuse a checkpoint root written by the one-query-per-table job: its
+    * running totals cannot be carried into this query's state, so
+    * starting here would restart them from zero and the replace-upserts
+    * would overwrite the accumulated DB totals with the small new ones. */
+  private def requireFanOutCheckpoint(spark: SparkSession, root: String): Unit = {
+    val dir = new Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = perTableCheckpoints.filter(n => fs.exists(new Path(dir, n)))
+    require(old.isEmpty || fs.exists(new Path(dir, queryName)),
+      s"checkpoint root $root holds the one-query-per-table layout " +
+        s"(${old.mkString(", ")}) and no $queryName: its running totals " +
+        "cannot be resumed, and starting afresh would overwrite the totals " +
+        "in the database. Use a new checkpointRoot and rebuild the tables " +
+        "by replaying the topic from its start (startingOffsets=earliest).")
+  }
+
+  /** Start the job's query with a custom per-batch sink — the seam specs
+    * capture batches through. `sink(table, keys)(batchDf, batchId)` is
+    * invoked once per table per micro-batch, the raw copy first. The
     * union of touched rows is PERSISTED once and all four tables are
-    * written from it — re-evaluation of the batch frame (the foreachBatch
-    * caveat) can never re-read the source. */
-  def startSharedSourceWithSink(spark: SparkSession, cfg: JobConfig,
-      source: DataFrame)(
-      sink: (String, Seq[String]) => (DataFrame, Long) => Unit): StreamingQuery =
+    * written from it — re-evaluation of the batch frame (the
+    * foreachBatch caveat) can never re-read the source. */
+  def startWithSink(spark: SparkSession, cfg: JobConfig, source: DataFrame)(
+      sink: (String, Seq[String]) => (DataFrame, Long) => Unit): StreamingQuery = {
+    requireFanOutCheckpoint(spark, cfg.checkpointRoot)
     fanState(fanIn(parse(source))).toDF().writeStream
-      .queryName("shared_source")
+      .queryName(queryName)
       .outputMode("update")
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/shared_source")
+      .option("checkpointLocation", s"${cfg.checkpointRoot}/$queryName")
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val df = batch.persist()
@@ -321,15 +264,18 @@ object EcommerceStreamJob {
         }
       }
       .start()
+  }
 
-  /** [[startAll]]'s single-read sibling: DDL once, then ONE streaming
-    * query upserting all four tables per micro-batch. */
-  def startAllSharedSource(spark: SparkSession, cfg: JobConfig,
-      source: Option[DataFrame] = None): StreamingQuery = {
+  /** Start the full job: DDL once at startup (replacing the reference's
+    * no-op DDL "sinks" W1–W4), then the one streaming query, upserting
+    * all four tables per micro-batch into Postgres. Conflict targets are
+    * the table PKs (`DataStreamJob.java:280,293,307`); the first-seen
+    * date/year is pinned per key, so each update hits the same row. */
+  def startAll(spark: SparkSession, cfg: JobConfig,
+      source: Option[DataFrame] = None): Seq[StreamingQuery] = {
     JdbcUpsert.runDdl(cfg.db)
-    startSharedSourceWithSink(spark, cfg,
-      source.getOrElse(kafkaSource(spark, cfg))) {
-      (table, keys) => upsertEachBatch(table, keys, cfg) _
-    }
+    Seq(startWithSink(spark, cfg, source.getOrElse(kafkaSource(spark, cfg))) {
+      (table, keys) => (batch, _) => JdbcUpsert.upsert(batch, table, keys, cfg.db)
+    })
   }
 }

@@ -2,80 +2,58 @@ package graft
 
 import java.nio.file.Files
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.StreamEventFixture.{CapturedDb, jsonTx}
 import graft.streaming.EcommerceStreamJob
 import graft.streaming.EcommerceStreamJob.JobConfig
 
-/** Multi-query concurrency over ONE shared source: all four pipelines
-  * of the job read the same `MemoryStream` simultaneously (the exact
-  * topology the Kafka deployment runs — four consumers of one topic),
-  * with data arriving in interleaved rounds while the queries are
-  * already live. What this pins down beyond EndToEndStreamSpec's
-  * file-source run:
-  *  - the queries keep INDEPENDENT offsets on the shared source — no
-  *    query steals or truncates another's unread batches (each has its
-  *    own checkpoint dir under `cfg.checkpointRoot/<name>`);
-  *  - feeding new data AFTER some queries have already processed the
-  *    previous round loses nothing anywhere;
+/** Data arriving in rounds while the job's query is already live, over a
+  * `MemoryStream` (a topic being produced to during the run). What this
+  * pins down beyond EndToEndStreamSpec's file-source run:
+  *  - feeding new data AFTER the query has processed the previous round
+  *    loses nothing, including a backlog of several batches;
   *  - the captured upsert end-state is batch truth for every table at
-  *    once, not per-pipeline in isolation. */
+  *    once. */
 class ConcurrentStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jsonTx(id: String, cat: String, amt: Double, ts: String): String =
-    s"""{"transactionId":"$id","productId":"p1","productName":"laptop",
-       |"productCategory":"$cat","productPrice":$amt,"productQuantity":1,
-       |"productBrand":"apple","totalAmount":$amt,"currency":"USD",
-       |"customerId":"c1","transactionDate":"$ts",
-       |"paymentMethod":"credit_card"}""".stripMargin.replaceAll("\n", "")
-
-  test("four concurrent queries over one MemoryStream all see every round") {
+  test("the live query sees every round, backlog included, in every table") {
     implicit val sql = spark.sqlContext
     val input = MemoryStream[String]
     val ckpt = Files.createTempDirectory("graft-conc-ckpt")
 
-    // captured "database": table -> key -> row (last write wins = upsert)
-    val db = TrieMap.empty[String, TrieMap[Seq[Any], Seq[Any]]]
+    val db = new CapturedDb
     val cfg = JobConfig(checkpointRoot = ckpt.toString, triggerMs = 10L)
-    val queries = EcommerceStreamJob.startAllWithSink(spark, cfg, input.toDF()) {
-      (table, keys) => (batch, _) =>
-        val cols = batch.columns.toSeq
-        val keyIdx = keys.map(cols.indexOf)
-        val t = db.getOrElseUpdate(table, TrieMap.empty)
-        batch.collect().foreach { row =>
-          t.put(keyIdx.map(row.get), cols.indices.map(row.get))
-        }
-    }
+    val query = EcommerceStreamJob.startWithSink(spark, cfg, input.toDF())(db.sink)
     try {
       // round 1: two categories, one day
       input.addData(
         jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"),
         jsonTx("t2", "fashion", 4.0, "2024-11-08T11:00:00.000000"))
-      queries.foreach(_.processAllAvailable())
-      // round 2 lands AFTER every query has fully processed round 1;
-      // two separate adds make the unprocessed backlog multi-batch
+      query.processAllAvailable()
+      // round 2 lands AFTER round 1 is fully processed; two separate
+      // adds make the unprocessed backlog multi-batch
       input.addData(jsonTx("t3", "electronic", 2.5, "2024-11-09T09:00:00.000000"))
       input.addData(
         jsonTx("t4", "grocery", 6.0, "2024-12-01T08:00:00.000000"),
         jsonTx("t5", "electronic", 1.0, "2024-12-02T12:00:00.000000"))
-      queries.foreach(_.processAllAvailable())
+      query.processAllAvailable()
 
-      // raw append sink: every query saw every round — all five ids
-      assert(db("transactions").keySet.map(_.head) ===
+      // raw copy: every round landed — all five ids
+      assert(db.rowsOf("transactions").map(_("transaction_id")).toSet ===
         Set("t1", "t2", "t3", "t4", "t5"))
       // category running totals across both rounds
-      val cat = db("sales_per_category").map { case (k, v) => k.last -> v.last }
+      val cat = db.rowsOf("sales_per_category").map(r => r("category") -> r("total_sales")).toMap
       assert(cat === Map("electronic" -> 13.5, "fashion" -> 4.0, "grocery" -> 6.0))
       // per-day totals: four distinct days
-      val day = db("sales_per_day").map { case (k, v) => k.head.toString -> v.last }
+      val day = db.rowsOf("sales_per_day")
+        .map(r => r("transaction_date").toString -> r("total_sales")).toMap
       assert(day === Map("2024-11-08" -> 14.0, "2024-11-09" -> 2.5,
         "2024-12-01" -> 6.0, "2024-12-02" -> 1.0))
       // per-month totals: Nov and Dec 2024
-      val month = db("sales_per_month").map { case (k, v) => k.last -> v.last }
+      val month = db.rowsOf("sales_per_month").map(r => r("month") -> r("total_sales")).toMap
       assert(month === Map(11 -> 16.5, 12 -> 7.0))
-    } finally queries.foreach(_.stop())
+    } finally query.stop()
   }
 }

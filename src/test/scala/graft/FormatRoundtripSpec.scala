@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Source/sink format surface beyond the driver's parquet: CSV, JSON
   * lines, and ORC write→read roundtrips must preserve values and
   * schema, and the columnar formats must keep predicate pushdown —
-  * the interchange guarantees a user switching pipelines relies on.
+  * the interchange guarantees a user switching formats between jobs relies on.
   * (No avro connector jar ships in /opt/spark/jars — parquet, orc,
   * csv, json, text are the complete built-in format surface here.) */
 class FormatRoundtripSpec extends SparkSpec {

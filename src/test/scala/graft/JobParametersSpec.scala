@@ -77,8 +77,7 @@ class JobParametersSpec extends AnyFunSuite {
       "kafka.bootstrap.servers" -> "k1:9092,k2:9092",
       "subscribe" -> "tx",
       "startingOffsets" -> "earliest"))
-    // group id only when explicitly set: the four concurrent queries
-    // must not share one consumer group (see JobConfig scaladoc)
+    // group id only when explicitly set; otherwise Spark names the group
     val withGroup = EcommerceStreamJob.kafkaSourceOptions(cfg.copy(groupId = "g1"))
     assert(withGroup("kafka.group.id") === "g1")
   }

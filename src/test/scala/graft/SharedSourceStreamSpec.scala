@@ -2,48 +2,25 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.StreamEventFixture.{CapturedDb, jsonTx}
 import graft.streaming.EcommerceStreamJob
 import graft.streaming.EcommerceStreamJob.JobConfig
 
-/** The single-read fan-out topology (`startAllSharedSource`,
-  * SURVEY §3 option (a)): ONE streaming query / ONE source read per
-  * micro-batch must land the SAME database end-state as the four-query
-  * topology — and provably read the source once where the four-query
-  * form reads it four times.
+/** The job reads its source ONCE per micro-batch (the reference's single
+  * read + fan-out, `DataStreamJob.java:113-163`) and lands the
+  * hand-computed running totals, which are also the batch aggregates
+  * over the same lines.
   */
 class SharedSourceStreamSpec extends SparkSpec {
 
-  private def jsonTx(id: String, cat: String, amt: Double, ts: String): String =
-    s"""{"transactionId":"$id","productId":"p1","productName":"laptop",
-       |"productCategory":"$cat","productPrice":$amt,"productQuantity":1,
-       |"productBrand":"apple","totalAmount":$amt,"currency":"USD",
-       |"customerId":"c1","transactionDate":"$ts",
-       |"paymentMethod":"credit_card"}""".stripMargin.replaceAll("\n", "")
-
-  /** captured "database": table -> key -> row (last write wins). */
-  private type Db = TrieMap[String, TrieMap[Seq[Any], Seq[Any]]]
-  private def capturingSink(db: Db)(table: String, keys: Seq[String])
-      : (DataFrame, Long) => Unit = (batch, _) => {
-    val cols = batch.columns.toSeq
-    val keyIdx = keys.map(cols.indexOf)
-    val t = db.getOrElseUpdate(table, TrieMap.empty)
-    batch.collect().foreach { row =>
-      val vals = cols.indices.map(row.get)
-      t.put(keyIdx.map(row.get), vals)
-    }
-  }
-
   // two micro-batches; every category sees ONE distinct date per batch
-  // so the first-seen-date quirk is deterministic in BOTH topologies
-  // (within-batch first() order is parallelism-dependent otherwise).
-  // Batch 2 re-keys electronic under a LATER date and adds a fresh
-  // category + a December row (new month bucket, first-seen year pinned
-  // by batch order), plus a replayed t1 (raw upsert collapses it).
+  // so the first-seen-date quirk is deterministic (within-batch arrival
+  // order is parallelism-dependent otherwise). Batch 2 re-keys
+  // electronic under a LATER date and adds a fresh category + a
+  // December row (new month bucket, first-seen year pinned by batch
+  // order), plus a replayed t1 (raw upsert collapses it).
   private val batch1 = Seq(
     jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"),
     jsonTx("t2", "fashion", 4.0, "2024-11-08T11:00:00.000000"),
@@ -53,68 +30,42 @@ class SharedSourceStreamSpec extends SparkSpec {
     jsonTx("t5", "grocery", 1.5, "2024-12-01T08:00:00.000000"),
     jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"))
 
-  private def runTopology(
-      start: (DataFrame, Db) => Seq[org.apache.spark.sql.streaming.StreamingQuery])
-      : (Db, Long) = {
+  test("end-state is the hand and batch totals, ONE source read per batch") {
     val dir: Path = Files.createTempDirectory("graft-shared-src")
+    val ckpt = Files.createTempDirectory("graft-shared-ckpt")
     // per-row source-read counter: every physical evaluation of a source
     // row bumps it, so N source reads of a K-row corpus count N·K
     val reads = spark.sparkContext.longAccumulator("source-reads")
     val counting = udf { (v: String) => reads.add(1); v }
     Files.writeString(dir.resolve("b1.json"), batch1.mkString("\n"))
-    val db: Db = TrieMap.empty
+    val db = new CapturedDb
     val source = EcommerceStreamJob.fileSource(spark, dir.toString)
       .select(counting(col("value")).as("value"))
-    val queries = start(source, db)
+    val query = EcommerceStreamJob.startWithSink(spark,
+      JobConfig(checkpointRoot = ckpt.toString, triggerMs = 50L), source)(db.sink)
     try {
-      queries.foreach(_.processAllAvailable())
+      query.processAllAvailable()
       Files.writeString(dir.resolve("b2.json"), batch2.mkString("\n"))
-      queries.foreach(_.processAllAvailable())
-    } finally queries.foreach(_.stop())
-    (db, reads.value)
-  }
+      query.processAllAvailable()
+    } finally query.stop()
 
-  test("end-state ≡ four-query topology, with ONE source read per batch instead of four") {
-    val (dbShared, readsShared) = runTopology { (source, db) =>
-      val ckpt = Files.createTempDirectory("graft-shared-ckpt")
-      Seq(EcommerceStreamJob.startSharedSourceWithSink(spark,
-        JobConfig(checkpointRoot = ckpt.toString, triggerMs = 50L),
-        source)(capturingSink(db)))
-    }
-    val (dbFour, readsFour) = runTopology { (source, db) =>
-      val ckpt = Files.createTempDirectory("graft-four-ckpt")
-      EcommerceStreamJob.startAllWithSink(spark,
-        JobConfig(checkpointRoot = ckpt.toString, triggerMs = 50L),
-        source)(capturingSink(db))
-    }
-    // identical end-state, table for table, keyed row for keyed row
-    assert(dbShared.keySet === dbFour.keySet)
-    for (table <- dbFour.keySet) {
-      val s = dbShared(table).toMap
-      val f = dbFour(table).toMap
-      assert(s === f, s"table $table diverged: shared=$s four=$f")
-    }
-    // …and the values are the hand-computed running totals
-    val cat = dbShared("sales_per_category")
-      .map { case (k, v) => (k(1), (k.head.toString, v.last)) }
+    // the hand-computed running totals
+    val cat = db.rowsOf("sales_per_category")
+      .map(r => r("category") -> (r("transaction_date").toString, r("total_sales"))).toMap
     assert(cat("electronic") === (("2024-11-08", 27.5))) // 10+2.5+5+10(replay)
     assert(cat("fashion") === (("2024-11-08", 4.0)))
     assert(cat("grocery") === (("2024-12-01", 1.5)))
-    assert(dbShared("transactions").size === 5) // replayed t1 collapsed
-    val month = dbShared("sales_per_month")
-      .map { case (k, v) => k(1) -> (k.head, v.last) }
+    assert(db.rowsOf("transactions").size === 5) // replayed t1 collapsed
+    val month = db.rowsOf("sales_per_month")
+      .map(r => r("month") -> (r("year"), r("total_sales"))).toMap
     assert(month(11) === ((2024, 31.5))) // 16.5 (b1) + 5 + 10 (b2 incl. replay)
     assert(month(12) === ((2024, 1.5)))
-    // the read-amplification claim, measured: 6 rows over 2 batches.
-    // Each query evaluates a source row exactly TWICE per batch (the
-    // engine's plan passes — uniform across topologies, measured
-    // 12 vs 48 here), so the per-query read count is 2 rows·batches
-    // and the four-query topology pays exactly 4× the shared one —
-    // against a broker that is 4 consumer-group reads of every byte
-    info(s"source row reads: shared=$readsShared four=$readsFour")
-    assert(readsShared === 12L,
-      s"shared topology: expected 2·6 row reads, saw $readsShared")
-    assert(readsFour === 48L,
-      s"four-query topology: expected 4·2·6 row reads, saw $readsFour")
+    // …which are the batch aggregates over the same lines
+    StreamEventFixture.assertEndStateIsBatch(
+      spark.read.text(dir.toString).select(col("value")), db.rowsOf)
+    // one read: 6 rows over 2 batches, and the engine evaluates each
+    // source row exactly TWICE per batch (its plan passes), so 2·6 —
+    // against a broker, one consumer-group read of every byte
+    assert(reads.value === 12L, s"expected 2·6 row reads, saw ${reads.value}")
   }
 }

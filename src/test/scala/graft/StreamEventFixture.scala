@@ -2,11 +2,85 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-/** Shared deterministic transaction-event fixture for the streaming
-  * throughput/durability specs: generator-format JSON
-  * (`main.py:24` naive-UTC ISO timestamps), 6 categories / 90 days /
-  * 3 months of keys, totalAmount = price × quantity. */
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.Ecommerce
+import graft.streaming.EcommerceStreamJob
+
+/** Shared fixtures for the streaming job's specs: a deterministic
+  * transaction-event writer in generator-format JSON (`main.py:24`
+  * naive-UTC ISO timestamps, 6 categories / 90 days / 3 months of keys,
+  * totalAmount = price × quantity), an in-memory sink for
+  * `EcommerceStreamJob.startWithSink`, and the end-state check against
+  * the batch aggregates. */
 object StreamEventFixture {
+
+  /** One transaction as the generator's JSON line. */
+  def jsonTx(id: String, cat: String, amt: Double, ts: String): String =
+    s"""{"transactionId":"$id","productId":"p1","productName":"laptop",
+       |"productCategory":"$cat","productPrice":$amt,"productQuantity":1,
+       |"productBrand":"apple","totalAmount":$amt,"currency":"USD",
+       |"customerId":"c1","transactionDate":"$ts",
+       |"paymentMethod":"credit_card"}""".stripMargin.replaceAll("\n", "")
+
+  /** In-memory stand-in for the job's database, fed through
+    * `EcommerceStreamJob.startWithSink`: per table, the end-state the
+    * keyed upserts leave (last write wins) and every row emitted, with
+    * its batch id. */
+  final class CapturedDb {
+    private val state = mutable.Map[String, mutable.LinkedHashMap[Seq[Any], Map[String, Any]]]()
+    private val log = mutable.ArrayBuffer[(String, Long, Map[String, Any])]()
+
+    def sink(table: String, keys: Seq[String]): (DataFrame, Long) => Unit =
+      (batch, batchId) => {
+        val rows = batch.collect().map(r => batch.columns.zip(r.toSeq).toMap)
+        synchronized {
+          val t = state.getOrElseUpdate(table, mutable.LinkedHashMap())
+          rows.foreach { r => t(keys.map(r)) = r; log += ((table, batchId, r)) }
+        }
+      }
+
+    def rowsOf(table: String): Vector[Map[String, Any]] =
+      synchronized(state.get(table).map(_.values.toVector).getOrElse(Vector.empty))
+
+    /** Rows emitted to `table` by batch `batchId`. */
+    def emitted(table: String, batchId: Long): Vector[Map[String, Any]] =
+      synchronized(log.collect { case (`table`, `batchId`, r) => r }.toVector)
+  }
+
+  /** Assert the job's four tables (read through `rowsOf`) hold exactly
+    * the `graft.operators.Ecommerce` batch aggregates over `lines`, the
+    * raw JSON the stream read: each running total within 1e-9 relative
+    * (incremental state merges sum in a different order than the batch
+    * partial aggregates), and one raw row per distinct valid id. */
+  def assertEndStateIsBatch(lines: DataFrame,
+      rowsOf: String => Seq[Map[String, Any]]): Unit = {
+    val tx = EcommerceStreamJob.parse(lines)
+    Seq(
+      ("sales_per_category", "category",
+        Ecommerce.salesPerCategory(tx, "productCategory", "totalAmount")),
+      ("sales_per_day", "transaction_date",
+        Ecommerce.salesPerDay(tx, "transactionDate", "totalAmount")),
+      ("sales_per_month", "month",
+        Ecommerce.salesPerMonthOfYear(tx, "transactionDate", "totalAmount"))
+    ).foreach { case (table, key, batch) =>
+      val got = rowsOf(table)
+        .map(r => r(key).toString -> r("total_sales").asInstanceOf[Double]).toMap
+      val exp = batch.collect()
+        .map(r => r.getAs[Any](key).toString -> r.getAs[Double]("total_sales")).toMap
+      assert(got.keySet == exp.keySet,
+        s"$table keys: streaming ${got.keySet} vs batch ${exp.keySet}")
+      got.foreach { case (k, v) =>
+        assert(math.abs(v - exp(k)) <= 1e-9 * math.max(1.0, math.abs(exp(k))),
+          s"$table[$k]: streaming $v vs batch ${exp(k)}")
+      }
+    }
+    val ids = tx.select("transactionId").distinct().count()
+    assert(rowsOf("transactions").size == ids,
+      s"transactions: ${rowsOf("transactions").size} rows vs $ids distinct ids")
+  }
   val categories: Vector[String] =
     Vector("electronic", "fashion", "grocery", "home", "beauty", "toy")
   val payments: Vector[String] =

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EcommerceStreamJob
@@ -10,8 +9,8 @@ import graft.streaming.EcommerceStreamJob.JobConfig
 
 /** Streaming THROUGHPUT evidence — the reference is a streaming job
   * (`DataStreamJob.java:84-170`) but every other performance number in
-  * this repo is batch. This spec drives the WHOLE topology (`startAll`:
-  * DDL once + four concurrent streaming queries through the real
+  * this repo is batch. This spec drives the WHOLE job (`startAll`:
+  * DDL once + its one streaming query through the real
   * [[graft.sinks.JdbcUpsert]] writer against the recording fake driver)
   * at ~1M events split over many micro-batches, then
   *
@@ -52,9 +51,8 @@ class StreamThroughputSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-streambench-src")
     val ckpt = Files.createTempDirectory("graft-streambench-ckpt")
     try {
-      // warmup slice first: the topology's first stateful micro-batch
-      // pays codegen compilation + state-store/provider setup (measured
-      // ~1min across 3 stateful queries at 32 cores) — a long-running
+      // warmup slice first: the job's first micro-batch pays codegen
+      // compilation + state-store/provider setup — a long-running
       // streaming job pays it once at deploy, so it is measured apart
       // from steady-state throughput
       writeEvents(dir, fromId = Events, count = WarmupN, files = 1, prefix = "warm")
@@ -62,8 +60,8 @@ class StreamThroughputSpec extends SparkSpec {
       val db = graft.sinks.FakeDb.fresh("streambench")
       val cfg = JobConfig(checkpointRoot = ckpt.toString, triggerMs = 50L,
         db = graft.sinks.FakeDb.cfg("streambench"))
-      // 4 files/trigger -> ~10 micro-batches per pipeline: the latency
-      // sample is per-batch behavior, not one giant catch-up batch.
+      // 4 files/trigger -> ~10 micro-batches: the latency sample is
+      // per-batch behavior, not one giant catch-up batch.
       // maxPartitionBytes sized so each micro-batch's ~4 small files
       // split across the host's cores instead of coalescing into ONE
       // scan partition (default 128 MB >> batch bytes -> the whole
@@ -73,7 +71,7 @@ class StreamThroughputSpec extends SparkSpec {
       val prevMpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
       spark.conf.set("spark.sql.files.maxPartitionBytes", 1024 * 1024)
       // State-store partition count is per-batch FIXED COST (tasks +
-      // checkpoint delta files each trigger, for every stateful query):
+      // checkpoint delta files each trigger):
       // size it to key cardinality (6/90/3 keys here), not host width.
       // A batch-analytics session wants wide shuffles; a streaming job
       // with small keyed state wants narrow ones.
@@ -143,9 +141,9 @@ class StreamThroughputSpec extends SparkSpec {
         s""""$n":{"batches":$b,"batch_ms_avg":$avg,"batch_ms_max":$max,""" +
           s""""exec_ms_avg":$ex,"state_rows":$st}"""
       }.mkString(",")
-      // batch-COMMIT latency percentiles across every main batch of all
-      // four pipelines (triggerExecution = the full receive→commit
-      // trigger, the number an SLO is written against), nearest-rank
+      // batch-COMMIT latency percentiles across every main batch
+      // (triggerExecution = the full receive→commit trigger, the
+      // number an SLO is written against), nearest-rank
       val allDurs = progress.values.flatten
         .filter(_.numInputRows > WarmupN)
         .map(p => Option(p.durationMs.get("triggerExecution"))
@@ -158,46 +156,15 @@ class StreamThroughputSpec extends SparkSpec {
       val latency = s""""batch_ms_p50":${pct(0.50)},""" +
         s""""batch_ms_p95":${pct(0.95)},"batch_ms_p99":${pct(0.99)},""" +
         s""""latency_batches":${allDurs.size},"state_store":"rocksdb""""
-      // Topology throughput: all four pipelines each consumed every event.
-      println(f"""STREAMBENCH {"events":$Events,"pipelines":4,"wall_s":$wallS%.1f,""" +
+      // the one query read every event once
+      println(f"""STREAMBENCH {"events":$Events,"queries":${progress.size},"wall_s":$wallS%.1f,""" +
         f""""warmup_s":$warmupS%.1f,""" +
         f""""events_per_sec":${(Events / wallS).toLong},""" +
-        f""""record_reads_per_sec":${(4L * Events / wallS).toLong},""" +
         f"""$latency,$summary}""")
 
       // ---- equivalence with the batch aggregates on the same events ----
-      val batchTx = EcommerceStreamJob.parse(
-        spark.read.text(dir.toString).select(col("value")))
-      def toMapBy[K](df: DataFrame, key: String, value: String): Map[K, Double] =
-        df.collect().map(r => r.getAs[K](key) -> r.getAs[Double](value)).toMap
-      val expCat = toMapBy[String](graft.operators.Ecommerce
-        .salesPerCategory(batchTx, "productCategory", "totalAmount"),
-        "category", "total_sales")
-      val expDay = toMapBy[java.sql.Date](graft.operators.Ecommerce
-        .salesPerDay(batchTx, "transactionDate", "totalAmount"),
-        "transaction_date", "total_sales")
-      val expMonth = toMapBy[Int](graft.operators.Ecommerce
-        .salesPerMonthOfYear(batchTx, "transactionDate", "totalAmount"),
-        "month", "total_sales")
-
-      // double sums accumulate in different orders (incremental state
-      // merge vs batch partial agg) — compare at 1e-9 relative
-      def assertTotals[K](got: Map[K, Double], exp: Map[K, Double], what: String): Unit = {
-        assert(got.keySet === exp.keySet, s"$what keys")
-        got.foreach { case (k, v) =>
-          assert(math.abs(v - exp(k)) <= 1e-9 * math.max(1.0, math.abs(exp(k))),
-            s"$what[$k]: streaming $v vs batch ${exp(k)}")
-        }
-      }
-      assertTotals(db.rowsOf("sales_per_category")
-        .map(r => r("category").asInstanceOf[String] ->
-          r("total_sales").asInstanceOf[Double]).toMap, expCat, "category")
-      assertTotals(db.rowsOf("sales_per_day")
-        .map(r => r("transaction_date").asInstanceOf[java.sql.Date] ->
-          r("total_sales").asInstanceOf[Double]).toMap, expDay, "day")
-      assertTotals(db.rowsOf("sales_per_month")
-        .map(r => r("month").asInstanceOf[Int] ->
-          r("total_sales").asInstanceOf[Double]).toMap, expMonth, "month")
+      StreamEventFixture.assertEndStateIsBatch(
+        spark.read.text(dir.toString).select(col("value")), db.rowsOf)
       // W5 raw copy: every distinct transaction id landed exactly once
       // (measured events + the warmup slice)
       assert(db.rowsOf("transactions").size === Events + WarmupN)
